@@ -12,18 +12,24 @@ import graft.sources.IngestionEngine
  * Daily batch-incremental orchestration
  * (reference: motor_ingesta/flujo_diario.py:27-74).
  *
- * Per daily file: ingest (flatten + coerce) → UTC enrich → detect the
- * file's date from the data (`first()`, single-date-file contract) →
+ * Per daily file: ingest (flatten + coerce) → detect the file's date
+ * from its first dated row (single-date-file contract) → UTC enrich →
  * read the previous day's partition of the output table (table missing
  * ⇒ no previous data; table present but partition empty ⇒ the union
  * path still runs, faithfully preserving the reference's semantics) →
  * `unionByName(allowMissingColumns)` so yesterday's rows (which carry
- * `_next` columns) and today's (which don't) align → materialize to a
- * provisional table (a lineage barrier: the final write overwrites a
- * table the plan would otherwise still be reading) → recompute
+ * `_next` columns) and today's (which don't) align → recompute
  * next-flight intervals over the stitched 2-day frame, fixing
  * yesterday's boundary NULLs → dynamic-partition-overwrite only the
- * affected `FlightDate` partitions → drop the provisional table.
+ * affected `FlightDate` partitions.
+ *
+ * The final write reads the table it overwrites. That is legal only
+ * under dynamic overwrite (static mode rejects it with
+ * `UNSUPPORTED_OVERWRITE.TABLE`, hence the reference's provisional
+ * table, flujo_diario.py:52-53): a dynamic overwrite stages its files
+ * and replaces the partitions at job commit, after every task has read
+ * yesterday's partition. So each day is one job commit; a failed write
+ * leaves every partition as it was.
  *
  * Scale: the previous-day read is partition-pruned; the stitch frame is
  * ≤2 days regardless of table size; the final write repartitions by the
@@ -39,11 +45,14 @@ import graft.sources.IngestionEngine
 class DailyFlow(val config: EngineConfig) {
 
   private val engine = new IngestionEngine(config)
-  private val ProvisionalTable = "tabla_provisional"
 
   /** Process one daily JSON file end-to-end into the output table. */
-  def processDaily(spark: SparkSession, dataFile: String): Unit =
-    processIngested(spark, engine.ingestFile(spark, dataFile))
+  def processDaily(spark: SparkSession, dataFile: String): Unit = {
+    val raw = engine.readJson(spark, dataFile)
+    // An empty file infers an empty schema, which coerce cannot select.
+    if (raw.schema.isEmpty) throw noDatedRows
+    processIngested(spark, engine.coerce(Flatten.flatten(raw)))
+  }
 
   /**
    * Core of the daily flow over an already-ingested (flattened +
@@ -52,25 +61,18 @@ class DailyFlow(val config: EngineConfig) {
    * ([[graft.streaming.StreamingDailyFlow]]), whose `foreachBatch`
    * hands each landing file's micro-batch here.
    */
-  def processIngested(spark: SparkSession, frame0: DataFrame): Unit = {
-    val ingested = frame0.cache()
+  def processIngested(spark: SparkSession, ingested: DataFrame): Unit = {
+    val today = detectDay(ingested)
     val withUtc = Enrich.addUtcTime(ingested, Enrich.loadTimezones(spark))
 
-    // Action #1: day detection from the data itself (single-date-file
-    // contract — reference: flujo_diario.py:40-41).
-    val today = withUtc.select("FlightDate").head().getDate(0).toLocalDate
-    val prevDay = today.minusDays(1)
-
-    val previous: Option[DataFrame] = readPreviousDay(spark, prevDay)
-
-    val frame = previous match {
-      case Some(prev) =>
-        val unioned = prev.unionByName(withUtc, allowMissingColumns = true)
-        // Materialization barrier (reference: flujo_diario.py:52-53).
-        unioned.write.mode("overwrite").saveAsTable(ProvisionalTable)
-        spark.read.table(ProvisionalTable)
-      case None => withUtc
-    }
+    val out = config.outputTable
+    val tableExists = spark.catalog.tableExists(out)
+    // Previous-day partition scan (reference: flujo_diario.py:43-47).
+    val frame =
+      if (!tableExists) withUtc
+      else spark.read.table(out)
+        .where(col("FlightDate") === lit(java.sql.Date.valueOf(today.minusDays(1))))
+        .unionByName(withUtc, allowMissingColumns = true)
 
     // Reference schema parity: the lead-carrier column is named
     // `Airline_next` (agregaciones.py:72).
@@ -78,15 +80,15 @@ class DailyFlow(val config: EngineConfig) {
       .addIntervals(frame, carrierNextCol = Some("Airline_next"))
       .repartition(config.outputPartitions, col("FlightDate"))
 
-    val out = config.outputTable
-    if (spark.catalog.tableExists(out)) {
+    if (tableExists) {
       // Dynamic overwrite replaces ONLY the partitions present in the
-      // frame. insertInto ignores writer options (V1 catalog path), so
-      // the session conf governs — set it for this write, restoring
-      // the caller's value after. insertInto is position-based, so
-      // align to the table's column order (partition column last).
+      // frame and allows the self-read (class doc). insertInto ignores
+      // writer options (V1 catalog path), so the session conf governs
+      // — set it for this write, restoring the caller's value after.
+      // insertInto is position-based, so align to the table's column
+      // order (partition column last).
       val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prevMode = spark.conf.getOption(modeKey)
+      val callerMode = spark.conf.get(modeKey) // always set: conf has a default
       spark.conf.set(modeKey, "dynamic")
       try {
         val tableCols = spark.table(out).columns.toIndexedSeq
@@ -94,10 +96,7 @@ class DailyFlow(val config: EngineConfig) {
           .select(tableCols.map(col): _*)
           .write.mode("overwrite")
           .insertInto(out)
-      } finally prevMode match {
-        case Some(v) => spark.conf.set(modeKey, v)
-        case None    => spark.conf.unset(modeKey)
-      }
+      } finally spark.conf.set(modeKey, callerMode)
     } else {
       withIntervals
         .write.mode("overwrite")
@@ -108,17 +107,16 @@ class DailyFlow(val config: EngineConfig) {
     // Dynamic overwrite replaces partition files in place; invalidate
     // any cached file listings other readers of the table may hold.
     spark.catalog.refreshTable(out)
-
-    spark.sql(s"DROP TABLE IF EXISTS $ProvisionalTable")
-    ingested.unpersist()
   }
 
-  /** Previous-day partition scan; table-missing ⇒ None
-    * (reference: flujo_diario.py:43-47). */
-  private def readPreviousDay(
-      spark: SparkSession, prevDay: LocalDate): Option[DataFrame] =
-    if (!spark.catalog.tableExists(config.outputTable)) None
-    else Some(
-      spark.read.table(config.outputTable)
-        .where(col("FlightDate") === lit(java.sql.Date.valueOf(prevDay))))
+  /** First non-NULL `FlightDate` (reference: flujo_diario.py:40-41);
+    * a limit-1 probe that stops at the first dated row. */
+  private def detectDay(ingested: DataFrame): LocalDate =
+    ingested.select("FlightDate").where(col("FlightDate").isNotNull)
+      .head(1).headOption.map(_.getDate(0).toLocalDate)
+      .getOrElse(throw noDatedRows)
+
+  private def noDatedRows = new IllegalArgumentException(
+    "daily input has no dated rows (it is empty or every FlightDate is " +
+      "NULL), so its day cannot be detected; nothing was written")
 }

@@ -22,8 +22,9 @@ import graft.sources.IngestionEngine
  * processed" bookkeeping, while cross-batch state stays where the
  * batch design put it — in the output table's previous-day
  * partition. `maxFilesPerTrigger=1` preserves the single-date-file
- * contract (day detection via `first()`); micro-batches execute
- * serially, so day N's write lands before day N+1 reads it.
+ * contract (the day is the batch's first non-NULL `FlightDate`);
+ * micro-batches execute serially, so day N's write lands before day
+ * N+1 reads it.
  *
  * Scale: identical plans to the batch path (the stream adds only
  * file discovery); state growth is bounded by the checkpoint's file

@@ -90,16 +90,7 @@ class StreamingDailyFlowSpec extends AnyFunSuite {
       f.toFile.setLastModified(1700000000000L + i * 60000L)
     }
 
-    def tableState(name: String): (Seq[(String, String)], Seq[Seq[Any]]) = {
-      spark.catalog.refreshTable(name)
-      val df = spark.read.table(name)
-      val fields = df.schema.fields.toSeq
-        .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
-      val rows = df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
-        .collect().map(_.toSeq).toSeq
-        .sortBy(_.map(String.valueOf).mkString("|"))
-      (fields, rows)
-    }
+    def tableState(name: String) = TestSpark.tableState(spark, name)
 
     // Batch leg: the same three files through DailyFlow, in order.
     val batchCfg = cfg.copy(output_table = Some("flights_batch_parity"))

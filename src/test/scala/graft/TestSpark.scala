@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** One shared local session for all suites (SURVEY.md §5). */
 object TestSpark {
@@ -16,5 +17,19 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Schema and rows of a catalog table, independent of column and row
+    * order, read after refreshing its file listing. */
+  def tableState(session: SparkSession, name: String)
+      : (Seq[(String, String)], Seq[Seq[Any]]) = {
+    session.catalog.refreshTable(name)
+    val df = session.read.table(name)
+    val fields = df.schema.fields.toSeq
+      .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1)
+    val rows = df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+      .collect().map(_.toSeq).toSeq
+      .sortBy(_.map(String.valueOf).mkString("|"))
+    (fields, rows)
   }
 }
