@@ -32,8 +32,8 @@ import graft.sources.IngestionEngine
  * leaves every partition as it was.
  *
  * Scale: the previous-day read is partition-pruned; the stitch frame is
- * ≤2 days regardless of table size; the final write repartitions by the
- * partition column for file-count control and — once the table exists —
+ * ≤2 days regardless of table size; the final write routes each date to
+ * its own task (one file per date) and — once the table exists —
  * goes through `insertInto` with dynamic partition overwrite, so only
  * the 1–2 affected `FlightDate` partitions are replaced and all older
  * partitions survive. (`saveAsTable(mode=overwrite)` would drop and
@@ -75,10 +75,16 @@ class DailyFlow(val config: EngineConfig) {
         .unionByName(withUtc, allowMissingColumns = true)
 
     // Reference schema parity: the lead-carrier column is named
-    // `Airline_next` (agregaciones.py:72).
+    // `Airline_next` (agregaciones.py:72). One writing task per date:
+    // routing by day number mod outputPartitions sends the stitch's
+    // two consecutive dates to different tasks (a hash of the date
+    // would put both in one task about one day in nine). NULL dates go
+    // to task 0.
     val withIntervals = Enrich
       .addIntervals(frame, carrierNextCol = Some("Airline_next"))
-      .repartition(config.outputPartitions, col("FlightDate"))
+      .repartitionById(config.outputPartitions, coalesce(
+        pmod(unix_date(col("FlightDate")), lit(config.outputPartitions)),
+        lit(0)))
 
     if (tableExists) {
       // Dynamic overwrite replaces ONLY the partitions present in the

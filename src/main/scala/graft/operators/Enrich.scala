@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * Enrichment operators (reference: motor_ingesta/agregaciones.py).
@@ -19,29 +22,36 @@ object Enrich {
   /**
    * Load the packaged IATA→IANA timezone dimension (8 875 rows,
    * reference: motor_ingesta/resources/timezones.csv, read at
-   * agregaciones.py:23-30). Parsed driver-side from the classpath
-   * resource into a LocalRelation: at this cardinality the dim is far
-   * below `autoBroadcastJoinThreshold`, so every join against it is a
+   * agregaciones.py:23-30) as a LocalRelation over [[timezoneRows]]:
+   * at this cardinality the dim is far below
+   * `autoBroadcastJoinThreshold`, so every join against it is a
    * broadcast-hash join with zero shuffle — the right plan at any fact
    * scale. Only (iata_code, iana_tz) are projected, as in the
    * reference; `windows_tz` is dropped.
    */
-  def loadTimezones(spark: SparkSession): DataFrame = {
-    import spark.implicits._
+  def loadTimezones(spark: SparkSession): DataFrame =
+    spark.createDataFrame(timezoneRows, TzSchema)
+
+  private val TzSchema = StructType(Seq(
+    StructField("iata_code", StringType), StructField("iana_tz", StringType)))
+
+  /** The dimension's (iata_code, iana_tz) rows, parsed driver-side
+    * from the classpath resource once per JVM. Building a frame from
+    * ready rows costs about a third of encoding tuples per call. */
+  private lazy val timezoneRows: java.util.List[Row] = {
     val in = getClass.getResourceAsStream(TzResource)
     require(in != null, s"classpath resource $TzResource missing")
     val src = scala.io.Source.fromInputStream(in, "UTF-8")
     try {
-      val rows = src.getLines().drop(1).zipWithIndex.flatMap {
+      src.getLines().drop(1).zipWithIndex.flatMap {
         case (line, _) if line.trim.isEmpty => None
         case (line, i) =>
           val parts = parseCsvLine(line)
           require(
             parts.length >= 2,
             s"timezones.csv line ${i + 2}: expected >=2 fields, got: $line")
-          Some((parts(0), parts(1)))
-      }.toVector
-      rows.toDF("iata_code", "iana_tz")
+          Some(Row(parts(0), parts(1)))
+      }.toVector.asJava
     } finally src.close()
   }
 

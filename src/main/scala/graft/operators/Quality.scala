@@ -2415,6 +2415,11 @@ object Quality {
     specs.foreach { case (name, keys, _) =>
       require(keys.nonEmpty,
         s"release '$name' must declare a non-empty key domain") }
+    val internal = Seq("__rel", "__seed", "__c", "__n", "__u",
+      "__noise", "__lo", "__hi")
+    require(!internal.contains(keyCol),
+      s"keyCol '$keyCol' collides with an internal column name " +
+        internal.mkString("(", ", ", ")"))
     val spark = df.sparkSession
     // The ONLY corpus-sized work for the whole family: one
     // partial-aggregated groupBy over the key column.
@@ -3784,8 +3789,9 @@ object Quality {
    * ANY family size. Refusal order and messages match
    * [[dpBatchedProbesAndAudits]] exactly: escape counts are checked
    * in declared order before any ledger row is built, count-only
-   * disclosure. Returns per-release (n_rows, released_total) in
-   * declared order.
+   * disclosure. A `__rel` tag naming no declared release refuses
+   * too, checked on the same per-release aggregate (no extra job).
+   * Returns per-release (n_rows, released_total) in declared order.
    */
   private def dpFamilyAuditsFromCombined(
       releases: Seq[DpDeclaredRelease],
@@ -3812,6 +3818,13 @@ object Quality {
       releases.foreach(r => require(byRel.contains(r.name),
         s"combined family frame carries no rows for declared " +
           s"release '${r.name}'"))
+      // Rows tagged with no declared release would escape both the
+      // containment probe and the ledger.
+      val undeclared = byRel.keySet -- releases.map(_.name)
+      require(undeclared.isEmpty,
+        s"combined family frame carries ${undeclared.size} __rel " +
+          "tag(s) naming no declared release: " +
+          undeclared.toSeq.map(String.valueOf).sorted.mkString(", "))
       // Containment probe (grouped keyed releases only): released
       // keys ⊆ declared domain, verified against the combined rows.
       val probed = releases.filter(r =>

@@ -51,6 +51,12 @@ object GraftBridge {
       case _ => ()
     }
 
+  /** Whether Spark's file listing skips a file or directory of this
+    * name (hidden, metadata and in-progress names) — so a listing made
+    * outside Spark sees the same data files a file index would. */
+  def isHiddenPath(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Test-harness hooks for `SparkContext.checkpointDir` (a
     * `private[spark]` var with a setter but no public un-setter).
     * A suite exercising the reliable-barrier path (`graft.operators

@@ -118,6 +118,29 @@ class DailyFlowSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS flights_test_skip")
   }
 
+  test("a stitched day writes its two dates from two tasks, one file per date") {
+    // 2023-01-09 and 2023-01-10 hash to the same one of 10 buckets, so
+    // routing by the date's hash wrote both from one task.
+    val name = "flights_test_route"
+    val flow = new DailyFlow(cfg.copy(output_table = Some(name), output_partitions = Some(10)))
+    def day(d: String, dep: Int) = writeDay("d.json", Seq(
+      s"""{"FlightDate": "$d", "Reporting_Airline": "AA", "Origin": "JFK", "DepTime": $dep}""",
+      s"""{"FlightDate": "$d", "Reporting_Airline": "DL", "Origin": "JFK", "DepTime": ${dep + 100}}"""))
+    flow.processDaily(spark, day("2023-01-09", 900))
+    flow.processDaily(spark, day("2023-01-10", 1000))
+    spark.catalog.refreshTable(name)
+    // part-<task>-<uuid>.c000.snappy.parquet under FlightDate=<date>/
+    val files = spark.table(name).inputFiles.toSeq.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      (p.getParent.getName, p.getName.split("-")(1))
+    }
+    assert(files.map(_._1).sorted ===
+      Seq("FlightDate=2023-01-09", "FlightDate=2023-01-10"), files)
+    assert(files.map(_._2).distinct.size === 2, s"one task wrote both dates: $files")
+    assert(spark.table(name).count() === 4)
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
   private val modeKey = "spark.sql.sources.partitionOverwriteMode"
 
   private val day1Rows = Seq(

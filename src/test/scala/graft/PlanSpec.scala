@@ -18,6 +18,19 @@ class PlanSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
   }
 
+  test("q180/q241: tables resolve once per session — a second run infers no schema") {
+    // A fresh session, so the first run must resolve its tables and
+    // the job-name match below is known to fire.
+    val s = spark.newSession()
+    def run(): Seq[String] = TestSpark.jobsDuring(s) {
+      Seq("q180_tpch21", "q241_bfs_hops")
+        .foreach(n => SparkEntry.queries(n)(s, dir).collect())
+    }._2.filter(_.startsWith("parquet at Tables.scala"))
+    assert(run().nonEmpty)
+    val again = run()
+    assert(again.isEmpty, s"second run re-inferred table schemas: $again")
+  }
+
   test("timezone dim join (Enrich.addUtcTime) is broadcast, never shuffled") {
     import spark.implicits._
     val flights = Seq(("JFK", java.sql.Date.valueOf("2024-01-01"), 930))

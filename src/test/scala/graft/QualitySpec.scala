@@ -2278,6 +2278,45 @@ class QualitySpec extends AnyFunSuite {
     }
   }
 
+  test("dpCountReleaseFamilyOverDomain refuses a keyCol that " +
+      "collides with one of its internal column names") {
+    val specs = Seq(("r1", Seq("a"), 1L))
+    Seq("__rel", "__seed", "__c", "__n", "__u", "__noise", "__lo",
+        "__hi").foreach { k =>
+      val df = Seq(("a", 1)).toDF(k, "n")
+      val ex = intercept[IllegalArgumentException] {
+        Quality.dpCountReleaseFamilyOverDomain(df, k, specs,
+          epsilon = 0.5, clampK = 80)
+      }
+      assert(ex.getMessage.contains(s"keyCol '$k' collides"), k)
+    }
+  }
+
+  test("batched release suites refuse a combined frame carrying a " +
+      "__rel tag that names no declared release") {
+    val df = Seq(("a", 1), ("b", 1)).toDF("k", "n")
+    val specs = Seq(("w1", Seq("a"), 11L), ("w2", Seq("b"), 12L))
+    val releases = specs.map { case (n, ks, s) =>
+      Quality.DpDeclaredRelease(n, 500000L,
+        () => Quality.dpCountReleaseOverDomain(df, ks.toDF("k"),
+          Seq("k"), epsilon = 0.5, seed = s, clampK = 80),
+        Some("released_count"), Some(n), Some(() => ks.toDF("k")),
+        Some("k"))
+    }
+    val combined = Quality.dpCountReleaseFamilyOverDomain(df, "k",
+      specs, epsilon = 0.5, clampK = 80)
+    // The declared family passes; a misspelled tag is refused.
+    Quality.dpReleaseSuiteZcdpPartitionedBatched(
+      releases, 5000000L, deltaPow10 = 6, combined).collect()
+    val stray = combined.unionAll(
+      Seq(("w3", "a", 1L)).toDF("__rel", "k", "released_count"))
+    val ex = intercept[IllegalArgumentException] {
+      Quality.dpReleaseSuiteZcdpPartitionedBatched(
+        releases, 5000000L, deltaPow10 = 6, stray)
+    }
+    assert(ex.getMessage.contains("naming no declared release: w3"))
+  }
+
   test("release-suite containment refusal (r15 ADVICE): a " +
       "mis-declared mechanism refuses with the COUNT of escaped " +
       "keys only — the key values are private data and never " +

@@ -170,34 +170,9 @@ class SimilaritySpec extends AnyFunSuite {
     val df = (0 until 200)
       .map(i => (i.toLong, Array.tabulate(4)(d => (i * (d + 1) % 17).toFloat)))
       .toDF("vec_id", "embedding")
-    def jobs(k: Int): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val markerSeen = new java.util.concurrent.CountDownLatch(1)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          if (js.properties != null && "graft-drain-marker" ==
-              js.properties.getProperty("spark.jobGroup.id"))
-            markerSeen.countDown()
-          else counter.incrementAndGet()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        Similarity.trainCentroids(df, "vec_id", "embedding", k, maxIter = 1)
-        // Deterministic drain barrier (a fixed sleep is flaky on a
-        // loaded machine): the async listener queue delivers events
-        // in order, so once the marker job's start — enqueued AFTER
-        // every trainCentroids event — is observed, every prior
-        // JobStart has already been counted.
-        spark.sparkContext.setJobGroup("graft-drain-marker", "drain")
-        try spark.sparkContext.parallelize(0 until 1, 1).count()
-        finally spark.sparkContext.clearJobGroup()
-        assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-          "listener bus failed to deliver marker job start within 30s")
-        counter.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobs(k: Int): Int = TestSpark.jobsDuring(spark)(
+      Similarity.trainCentroids(df, "vec_id", "embedding", k, maxIter = 1))
+      ._2.size
     val j3 = jobs(3)
     val j12 = jobs(12)
     assert(j12 === j3,
